@@ -72,8 +72,6 @@ def main(argv: list[str] | None = None) -> int:
                    choices=["jp_random", "jp_lf", "jp_sl", "johansson", "barenboim", "elkin"], help="coloring variant")
     p.add_argument("--metric", default="adamic_adar", help="link_prediction similarity metric")
     p.add_argument("--topq", type=int, default=20, help="link_prediction top-q")
-    p.add_argument("--set-backend", default="sorted", choices=["sorted", "bitmap"],
-                   help="triangles: set-intersection kernel (sorted numpy vs bit-packed bitmap, graph/bitset.py)")
     args = p.parse_args(argv)
 
     # pagerank-only flags: fail loudly rather than silently ignore —
@@ -83,8 +81,6 @@ def main(argv: list[str] | None = None) -> int:
         for flag, val in (("--start-scores", args.start_scores), ("--weighted", args.weighted)):
             if val:
                 raise SystemExit(f"{flag} is only consumed by --kernel pagerank (got {args.kernel})")
-    if args.set_backend != "sorted" and args.kernel != "triangles":
-        raise SystemExit(f"--set-backend is only consumed by --kernel triangles (got {args.kernel})")
 
     from gms_spark.session import get_spark
 
@@ -144,7 +140,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.kernel == "triangles":
         from gms_spark.graph.triangles import triangle_count_total
 
-        t = triangle_count_total(graph, set_backend=args.set_backend)
+        t = triangle_count_total(graph)
         out, iters = spark.createDataFrame([(t,)], "triangles long"), 1
     elif args.kernel == "triangles_vertex":
         from gms_spark.graph.triangles import triangle_count_per_vertex

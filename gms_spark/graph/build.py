@@ -60,11 +60,9 @@ def stage_edges(df: DataFrame) -> DataFrame:
     — NOT ``persist`` — is deliberate for this table: the columnar
     in-memory cache pays compression on build and decompression on
     every round's scan (measured ~1.6× slower per CC round at sf0.1),
-    while checkpoint blocks deserialize fast. The state-table side is
-    the opposite (persist keeps Catalyst's outputPartitioning so chained
-    supersteps skip a shuffle — see runtime/superstep.py); edges are
-    re-joined against a broadcast or reshuffled state anyway, so only
-    scan speed matters. A caller-persisted input is returned unchanged
+    while checkpoint blocks deserialize fast. Edges are re-joined
+    against a broadcast or reshuffled state anyway, so only scan speed
+    matters. A caller-persisted input is returned unchanged
     (their cache, their policy). Checkpoint blocks are reclaimed by the
     ContextCleaner once the frame is unreferenced; on a real cluster a
     durable TableIO snapshot plays this role instead.
@@ -204,7 +202,9 @@ def assign_dense_ids(df: DataFrame, order_cols: list, id_col: str = "id", num_pa
     # sides disagreed on the dictionary). The checkpoint pins one
     # evaluation; downstream can only scan it (a lost block fails
     # loudly instead of resampling).
-    return ranged.mapInPandas(add_ids, out_schema).localCheckpoint(eager=True)
+    out = ranged.mapInPandas(add_ids, out_schema).localCheckpoint(eager=True)
+    ranged.unpersist()
+    return out
 
 
 def dense_rank_ids(
@@ -271,7 +271,9 @@ def dense_rank_ids(
     # Eager checkpoint: same load-bearing barrier as assign_dense_ids —
     # the range sampling is per-execution random, so the one evaluation
     # made here must be the only one consumers can ever see.
-    return ranged.mapInPandas(add_ids, out_schema).localCheckpoint(eager=True)
+    out = ranged.mapInPandas(add_ids, out_schema).localCheckpoint(eager=True)
+    ranged.unpersist()
+    return out
 
 
 def edges_from_pages(pages: DataFrame, keep_external: bool = False) -> tuple[DataFrame, DataFrame]:
@@ -305,15 +307,10 @@ def edges_from_pages(pages: DataFrame, keep_external: bool = False) -> tuple[Dat
     # before exchanging it — unstaged, the degree join would execute
     # once per pass
     all_urls = urls.join(deg, "url", "left").fillna(0, ["degree"]).localCheckpoint(eager=True)
-    # materialize the (slim) dictionary once: the edge join consumes it
-    # TWICE (src and dst side) and its id-assignment tail is an Arrow
-    # mapInPandas stage — left lazy, that Python stage runs once per
-    # consumer (and a third time for any caller using url_dict itself)
-    url_dict = (
-        assign_dense_ids(all_urls, [F.col("degree").desc(), F.col("url").asc()])
-        .select("url", "id")
-        .localCheckpoint(eager=True)
-    )
+    # the edge join consumes the dictionary TWICE (src and dst side);
+    # assign_dense_ids returns an eager checkpoint, so both sides (and
+    # any caller using url_dict itself) scan its one materialization
+    url_dict = assign_dense_ids(all_urls, [F.col("degree").desc(), F.col("url").asc()]).select("url", "id")
 
     e = (
         links.join(url_dict.withColumnRenamed("url", "src_url").withColumnRenamed("id", "src"), "src_url")

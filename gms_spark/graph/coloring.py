@@ -83,7 +83,7 @@ def jp_color(
     round. With the state referenced exactly once per round, ``chunk``
     rounds chain lazily into ONE Spark job with zero recompute (the old
     shape re-executed ~3^k state subtrees per chunk, which is why
-    chunking used to measure 2× SLOWER — truncate_every=1 was optimal
+    chunking used to measure 2× SLOWER — per-round truncation was optimal
     only for that plan). The per-round commit rule and mex arithmetic
     are unchanged, so the coloring is bit-identical.
     """
@@ -263,14 +263,14 @@ def johansson(edges: DataFrame, seed: int = 5, max_iters: int = 500) -> Coloring
             .select("vertex")
             .distinct()
         )
-        # uncolored count as a Column delta — one job/round, see jp_color
-        new = picked.join(conflicts.withColumn("_bad", F.lit(1)), "vertex", "left").select(
+        return picked.join(conflicts.withColumn("_bad", F.lit(1)), "vertex", "left").select(
             "vertex",
             F.coalesce("color", F.when(F.col("_bad").isNull(), F.col("pick"))).alias("color"),
         )
-        return new, F.sum(F.when(F.col("color").isNull(), 1).otherwise(0))
 
-    res = iterate(state0, step, max_iters=max_iters, tol=0.0, kernel="coloring_johansson", truncate_every=1)
+    # uncolored count as a Column delta — one job/round, see jp_color
+    uncolored = F.sum(F.when(F.col("color").isNull(), 1).otherwise(0))
+    res = iterate(state0, step, max_iters=max_iters, tol=0.0, kernel="coloring_johansson", delta=lambda i: uncolored)
     if res.deltas and res.deltas[-1] > 0:
         raise RuntimeError(f"johansson: {int(res.deltas[-1])} vertices uncolored after {max_iters} rounds")
     colors = res.state.select("vertex", "color")

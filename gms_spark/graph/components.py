@@ -8,22 +8,23 @@ fixpoint — label[v] = min vertex id of v's component — is identical, and
 that is what we verify exactly (verifier cc.cc:98-138 checks consistency
 with BFS reachability).
 
-Spark shape per superstep (input must be symmetrized):
-  1. exchange:  cand = edges ⋈ labels(src) → groupBy(dst).min(label)
-     (partial aggregation pre-combines hub inputs map-side — the skew
-     control for high in-degree vertices)
-  2. hook:      new = least(old, cand)
-  3. compress:  new = labels[new] via a self-join (one pointer jump),
-     turning O(diameter) rounds into O(log n) on long chains.
-Convergence: changed-row count == 0, read by the driver like the
-reference's change flag (cc.cc:45-47).
+Spark shape (input must be symmetrized):
+  1. exchange + hook, every round:  new = (edges ∪ self-loops) ⋈
+     labels(src) → groupBy(dst).min(label) (partial aggregation
+     pre-combines hub inputs map-side — the skew control for high
+     in-degree vertices; the self-loop makes min include the own label)
+  2. compress, at each chunk boundary:  labels = labels[labels] via a
+     self-join of the materialized state (one pointer jump), turning
+     O(diameter) rounds into O(log n) on long chains.
+Convergence: changed-row count == 0 over a chunk, read by the driver
+like the reference's change flag (cc.cc:45-47).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gms_spark.graph.build import vertices
@@ -50,15 +51,16 @@ def connected_components(
     """See module docstring.
 
     ``check_every > 1`` (no-checkpoint runs only) chains that many
-    min-exchange+compress rounds lazily per Spark job and tests the
-    changed-count once per chunk. Correct because labels are monotone
-    non-increasing: a chunk with zero changes proves the fixpoint.
-    3 is MEASURED optimal — each round references the incoming labels
-    ~3× (exchange join, hook, compress self-join), so a k-deep lazy
-    chain carries ~3^k copies of the state subtree; at sf0.1,
+    min-exchange rounds lazily per Spark job and tests the changed-count
+    once per chunk. Correct because labels are monotone non-increasing:
+    a chunk with zero changes proves the fixpoint. A round must reference
+    the incoming labels exactly once: the former round shape referenced
+    them ~3× (exchange join, hook, compress self-join), so a k-deep lazy
+    chain carried ~3^k copies of the state subtree — at sf0.1,
     check_every=5 ran 10-20× SLOWER than 3 (172-210 s vs 9-18 s,
-    identical fixpoint hash) AND wasted rounds on the coarser
-    convergence check (10 vs 6). Do not raise it.
+    identical fixpoint hash) AND wasted rounds on the coarser convergence
+    check (10 vs 6). With io, every round commits and is followed by a
+    pointer jump.
 
     ``hub_salt_threshold=k`` splits destinations with in-degree > k into
     salt buckets on the static edge side (skew.py): the min-exchange
@@ -94,115 +96,54 @@ def connected_components(
     else:
         labels0 = verts.select("vertex", F.col("vertex").alias("component"))
 
-    def one_round(labels: DataFrame) -> DataFrame:
+    # The hook ("new = least(old, cand)") is folded into the min-exchange
+    # by adding STATIC self-loops to the edge table: min over {own label}
+    # ∪ {neighbor labels} is the hooked label, so one round references
+    # the incoming labels exactly ONCE (join + groupBy-min — same as a PR
+    # superstep) and check_every-deep lazy chaining is recompute-free.
+    # Pointer jumping runs at the CHUNK BOUNDARY (iterate's boundary),
+    # where the state is materialized: labels[labels[v]] is then a cheap
+    # join of two scans, applied lazily as the next chunk's input — same
+    # O(log n) chain shortcutting, zero per-round cost. The fixpoint
+    # (label = min vertex id of the component) is identical. Like
+    # PageRank's ew, the self-looped edge table is repartitioned by src
+    # ONCE and persisted with its partitioning metadata, so per-round
+    # joins shuffle only the (slim) label side.
+    num_partitions = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    loops = verts.select(F.col("vertex").alias("src"), F.col("vertex").alias("dst"))
+    if salted:
+        loops = loops.withColumn("_salt", F.lit(0).cast("int"))
+    ep = edges.select("src", "dst", *salted).unionAll(loops).repartition(num_partitions, "src").persist()
+    ep.count()
+
+    def round_(labels: DataFrame, i: int) -> DataFrame:
         cand = (
-            edges.join(labels.withColumnRenamed("vertex", "src"), "src")
+            ep.join(labels.withColumnRenamed("vertex", "src"), "src")
             .groupBy(F.col("dst").alias("vertex"), *salted)
-            .agg(F.min("component").alias("cand"))
+            .agg(F.min("component").alias("component"))
         )
         if salted:
-            cand = cand.groupBy("vertex").agg(F.min("cand").alias("cand"))
-        new = labels.join(cand, "vertex", "left").select(
-            "vertex", F.least(F.col("component"), F.coalesce(F.col("cand"), F.col("component"))).alias("component")
+            cand = cand.groupBy("vertex").agg(F.min("component").alias("component"))
+        return cand
+
+    def jump(labels: DataFrame) -> DataFrame:
+        """component <- component[component] over a materialized state."""
+        parent = labels.select(F.col("vertex").alias("component"), F.col("component").alias("grand"))
+        return labels.join(parent, "component", "left").select(
+            "vertex", F.coalesce(F.col("grand"), F.col("component")).alias("component")
         )
-        if compress:
-            # pointer jump: component <- component[component]
-            parent = new.select(F.col("vertex").alias("component"), F.col("component").alias("grand"))
-            new = new.join(parent, "component", "left").select(
-                "vertex", F.coalesce(F.col("grand"), F.col("component")).alias("component")
-            )
-        return new
 
-    def _fuse_changed(new: DataFrame, old: DataFrame) -> tuple[DataFrame, Observation]:
-        """Ride the changed-row count on the new-label plan (df.observe):
-        the compare-join runs INSIDE the materialization job — one job
-        per round/chunk instead of materialize + count."""
-        obs = Observation()
-        fused = (
-            new.join(old.select("vertex", F.col("component").alias("_old")), "vertex")
-            .observe(obs, F.sum(F.when(F.col("component") != F.col("_old"), 1).otherwise(0)).alias("delta"))
-            .select("vertex", "component")
-        )
-        return fused, obs
-
-    if io is None and check_every > 1:
-        # Fast path, PageRank-shaped. The hook ("new = least(old, cand)")
-        # is folded into the min-exchange by adding STATIC self-loops to
-        # the edge table: min over {own label} ∪ {neighbor labels} is the
-        # hooked label, so one round references the incoming labels
-        # exactly ONCE (join + groupBy-min — same as a PR superstep).
-        # That makes check_every-deep lazy chaining recompute-free
-        # (the old round referenced labels ~4×: exchange, hook join and
-        # the compress self-join — a k-deep chain re-executed ~4^k state
-        # subtrees, the measured reason check_every=5 ran 10-20× slower
-        # than 3). Pointer jumping moves to the CHUNK BOUNDARY, where the
-        # state is a materialized checkpoint: labels[labels[v]] is then a
-        # cheap two-scan join, applied lazily as the next chunk's input —
-        # same O(log n) chain shortcutting, zero per-round cost. The
-        # fixpoint (label = min vertex id of the component) is identical.
-        # Like PageRank's ew, the self-looped edge table is repartitioned
-        # by src ONCE and persisted with its partitioning metadata, so
-        # per-round joins shuffle only the (slim) label side.
-        num_partitions = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        loops = verts.select(
-            F.col("vertex").alias("src"), F.col("vertex").alias("dst")
-        )
-        if salted:
-            loops = loops.withColumn("_salt", F.lit(0).cast("int"))
-        ep = (
-            edges.select("src", "dst", *salted)
-            .unionAll(loops)
-            .repartition(num_partitions, "src")
-            .persist()
-        )
-        ep.count()
-
-        def fast_round(labels: DataFrame) -> DataFrame:
-            cand = (
-                ep.join(labels.withColumnRenamed("vertex", "src"), "src")
-                .groupBy(F.col("dst").alias("vertex"), *salted)
-                .agg(F.min("component").alias("component"))
-            )
-            if salted:
-                cand = cand.groupBy("vertex").agg(F.min("component").alias("component"))
-            return cand
-
-        labels = labels0.persist()
-        labels.count()
-        chain_in = labels
-        done = 0
-        while done < max_iters:
-            k = min(check_every, max_iters - done)
-            new = chain_in
-            for _ in range(k):
-                new = fast_round(new)
-            new, obs = _fuse_changed(new, chain_in)
-            new = new.localCheckpoint(eager=True)
-            done += k
-            ch = int(obs.get["delta"] or 0)
-            labels.unpersist()
-            labels = new
-            if ch == 0:
-                break
-            chain_in = labels
-            if compress:
-                # boundary pointer jump over the checkpointed state —
-                # lazy: it runs inside the next chunk's job (and the
-                # boundary fuse), each a join of two checkpoint scans.
-                parent = labels.select(
-                    F.col("vertex").alias("component"), F.col("component").alias("grand")
-                )
-                chain_in = labels.join(parent, "component", "left").select(
-                    "vertex",
-                    F.coalesce(F.col("grand"), F.col("component")).alias("component"),
-                )
-        ep.unpersist()
-        return ComponentsResult(labels, done)
-
-    def step(labels: DataFrame, i: int) -> tuple[DataFrame, object]:
-        return _fuse_changed(one_round(labels), labels)
-
-    res = iterate(labels0, step, max_iters=max_iters, tol=0.0, io=io, kernel="components", run_id=run_id)
+    res = iterate(
+        labels0,
+        round_,
+        max_iters=max_iters,
+        tol=0.0,
+        io=io,
+        kernel="components",
+        run_id=run_id,
+        check_every=check_every,
+        change=lambda new, old: (new != old).cast("long"),
+        boundary=jump if compress else None,
+    )
+    ep.unpersist()
     return ComponentsResult(res.state, res.iterations)

@@ -13,9 +13,10 @@ pinned here and by the in-repo numpy oracle (tests/oracles.py), making
   * run a FIXED number of supersteps (deterministic; asynchronous LP is
     order-dependent and unsuitable for an exact-match contract).
 
-Spark shape: edges ⋈ labels → count per (vertex, label) (partial aggs
-absorb hub fan-in) → per-vertex argmax via max_by on a (count, -label)
-struct — a single aggregation, no window sort.
+Spark shape: (edges ∪ weight-0 self-loops) ⋈ labels → vote count per
+(vertex, label) (partial aggs absorb hub fan-in) → per-vertex argmax via
+max_by on a (count, -label) struct — a single aggregation, no window
+sort, and no join back onto the incoming labels.
 """
 
 from __future__ import annotations
@@ -28,6 +29,10 @@ from pyspark.sql import functions as F
 from gms_spark.graph.build import vertices
 from gms_spark.io.tableio import TableIO
 from gms_spark.runtime.superstep import iterate
+
+
+#: rounds chained per Spark job in memory (the plan is truncated every 4)
+CHUNK = 4
 
 
 @dataclass
@@ -59,37 +64,32 @@ def label_propagation(
         # re-stage: the salt join must not re-execute per round
         edges = stage_edges(with_hub_salt(edges, hub_salt_threshold))
         salted = ["_salt"]
-    verts = vertices(edges)
-    labels0 = verts.select("vertex", F.col("vertex").alias("label"))
+    labels0 = vertices(edges).select("vertex", F.col("vertex").alias("label"))
+    # Every src row also emits a self-loop with vote weight 0: a vertex's
+    # own label then joins its groupBy(vertex) group at count 0, so a
+    # vertex with in-neighbors still takes their most frequent label
+    # (every real vote counts >= 1) and one without any (it appears only
+    # as src) keeps its own. That replaces the keep-own-label join back
+    # onto the incoming labels, so a round references them exactly ONCE
+    # and chained rounds are recompute-free. The duplicate zero rows
+    # collapse in the map-side partial aggregate; a distinct over the
+    # vertices would cost an exchange per round instead.
+    loops = edges.select("src", F.col("src").alias("dst"), F.lit(0).alias("w"), *[F.lit(0).alias(c) for c in salted])
+    ep = edges.select("src", "dst", F.lit(1).alias("w"), *salted).unionAll(loops)
 
-    def one_round(labels: DataFrame) -> DataFrame:
-        nb = edges.join(labels.withColumnRenamed("vertex", "src"), "src").select(
-            F.col("dst").alias("vertex"), *salted, "label"
+    def round_(labels: DataFrame, i: int) -> DataFrame:
+        nb = ep.join(labels.withColumnRenamed("vertex", "src"), "src").select(
+            F.col("dst").alias("vertex"), *salted, "label", "w"
         )
-        counts = nb.groupBy("vertex", "label", *salted).agg(F.count("*").alias("cnt"))
+        counts = nb.groupBy("vertex", "label", *salted).agg(F.sum("w").alias("cnt"))
         if salted:
             counts = counts.groupBy("vertex", "label").agg(F.sum("cnt").alias("cnt"))
         # argmax by (cnt desc, label asc): max_by over struct(cnt, -label)
-        best = counts.groupBy("vertex").agg(
-            F.max_by("label", F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("new_label")
-        )
-        return labels.join(best, "vertex", "left").select(
-            "vertex", F.coalesce(F.col("new_label"), F.col("label")).alias("label")
+        return counts.groupBy("vertex").agg(
+            F.max_by("label", F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("label")
         )
 
-    if io is None:
-        # Fixed iteration count, no durable checkpoint: chain all rounds
-        # lazily (plan truncated every 4) — one-ish Spark job total.
-        labels = labels0
-        for i in range(iters):
-            labels = one_round(labels)
-            if (i + 1) % 4 == 0 and i + 1 < iters:
-                labels = labels.localCheckpoint(eager=True)
-        labels = labels.localCheckpoint(eager=True)
-        return LabelPropResult(labels, iters)
-
-    def step(labels: DataFrame, i: int) -> tuple[DataFrame, float]:
-        return one_round(labels), float("inf")
-
-    res = iterate(labels0, step, max_iters=iters, tol=-1.0, io=io, kernel="labelprop", run_id=run_id)
+    res = iterate(
+        labels0, round_, max_iters=iters, io=io, kernel="labelprop", run_id=run_id, check_every=CHUNK
+    )
     return LabelPropResult(res.state, res.iterations)

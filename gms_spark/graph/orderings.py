@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gms_spark.graph.build import assign_dense_ids, degrees, vertices
-from gms_spark.runtime.superstep import truncate_plan
+from gms_spark.runtime.superstep import iterate, truncate_plan
 
 
 def identity_order(edges: DataFrame) -> DataFrame:
@@ -321,8 +321,6 @@ def coreness_hindex(
     """
     from pyspark.sql import Window
 
-    from gms_spark.runtime.superstep import truncate_plan
-
     from gms_spark.graph.build import stage_edges
 
     edges = stage_edges(edges)
@@ -333,7 +331,7 @@ def coreness_hindex(
         .select("vertex", F.col("degree").cast("long").alias("core"))
     )
 
-    def one_round(cur: DataFrame) -> DataFrame:
+    def one_round(cur: DataFrame, i: int) -> DataFrame:
         nb = edges.join(
             cur.select(F.col("vertex").alias("dst"), F.col("core").alias("nval")), "dst"
         ).select(F.col("src").alias("vertex"), "nval")
@@ -362,39 +360,13 @@ def coreness_hindex(
         # subtrees per chunk).
         return h.select("vertex", F.col("h").cast("long").alias("core"))
 
-    done = 0
-    converged = False
-    while done < max_rounds:
-        k = min(check_every, max_rounds - done)
-        new = c
-        for _ in range(k):
-            new = one_round(new)
-        # ONE job per chunk: _old rides the materialized state so the
-        # changed-count is aggregated by the same action that fills the
-        # chunk's lazy localCheckpoint + cache (an Observation through a
-        # lazy checkpoint resolves to None — see runtime/superstep.py)
-        fused = (
-            new.join(c.select("vertex", F.col("core").alias("_old")), "vertex")
-            .select("vertex", "core", "_old")
-            .localCheckpoint(eager=False)
-            .persist()
-        )
-        ch = int(
-            fused.agg(
-                F.sum(F.when(F.col("core") != F.col("_old"), 1).otherwise(0)).alias("d")
-            ).first()["d"]
-            or 0
-        )
-        done += k
-        c.unpersist()
-        c = fused
-        if ch == 0:
-            converged = True
-            break
-    if not converged:
+    res = iterate(
+        c, one_round, max_iters=max_rounds, tol=0.0, kernel="coreness", check_every=check_every,
+        change=lambda new, old: (new != old).cast("long"),
+    )
+    if not res.deltas or res.deltas[-1] > 0:
         raise RuntimeError(f"coreness H-index did not converge within {max_rounds} rounds")
-    out = c.select("vertex", "core")
-    return (out, done) if return_rounds else out
+    return (res.state, res.iterations) if return_rounds else res.state
 
 
 def coreness(edges: DataFrame, max_rounds: int = 200) -> DataFrame:

@@ -22,8 +22,8 @@ Scale design:
     edge side (skew.py), and the gather becomes the two-stage aggregate
     groupBy(dst, salt) → groupBy(dst) — only hub keys pay the second
     stage, and the salt never recomputes across supersteps.
-  * plan depth stays O(1) via the superstep runtime (checkpoint or
-    localCheckpoint each iteration).
+  * plan depth stays O(check_every) via the superstep runtime
+    (runtime/superstep.py: a checkpoint at every chunk boundary).
 """
 
 from __future__ import annotations
@@ -65,7 +65,9 @@ def pagerank(
     instead of per superstep (big win: no per-iteration driver round
     trip). May overshoot convergence by up to check_every-1 supersteps;
     identical scores for fixed_iters runs. Ignored when ``io`` is given
-    (durable checkpointing is per-superstep by contract).
+    (durable checkpointing is per-superstep by contract) and for
+    ``dangling="redistribute"`` on graphs with dangling vertices (each
+    superstep's plan needs the previous one's dangling mass).
     """
     spark = edges.sparkSession
     if num_partitions is None:
@@ -198,127 +200,49 @@ def pagerank(
             (F.lit(base + extra) + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias("score"),
         )
 
-    def _extra(scores: DataFrame) -> float:
-        if n_dangling and dangling == "redistribute":
-            dmass = scores.join(dang, "vertex", "left_semi").agg(F.sum("score")).first()[0] or 0.0
-            return damping * dmass / n
-        return 0.0
+    redistribute = bool(n_dangling) and dangling == "redistribute"
+    dflag = dang.withColumn("_d", F.lit(1.0)) if redistribute else None
+    dmass_obs: dict[int, Observation] = {}  # superstep -> its dangling-mass metric
 
-    def _fuse_delta(new: DataFrame, old: DataFrame) -> tuple[DataFrame, Observation]:
-        """Ride the L1 delta on the new-state plan via df.observe: the
-        join against the old scores happens INSIDE the materialization
-        job (one job per superstep instead of materialize + delta-agg)."""
-        obs = Observation()
-        fused = (
-            new.join(old.select("vertex", F.col("score").alias("_old")), "vertex")
-            .observe(obs, F.sum(F.abs(F.col("score") - F.col("_old"))).alias("delta"))
+    def dangling_mass(scores: DataFrame, i: int) -> float:
+        """Σ score over dangling vertices of superstep i's input. Read off
+        the previous superstep's own materialization when it ran in this
+        process; analytic (n_dangling/n) under the uniform init; one job
+        otherwise (a resumed superstep, or a warm start whose seed is not
+        uniform — the analytic value would send the run down the wrong
+        trajectory to the same fixpoint)."""
+        if i - 1 in dmass_obs:
+            return float(dmass_obs.pop(i - 1).get["dmass"] or 0.0)
+        if i == 0 and start_scores is None:
+            return n_dangling / n
+        return float(scores.join(dang, "vertex", "left_semi").agg(F.sum("score")).first()[0] or 0.0)
+
+    def step(scores: DataFrame, i: int) -> DataFrame:
+        if not redistribute:
+            return one_superstep(scores)
+        # Directed graphs: the redistributed mass for superstep i+1 is
+        # Σ score_i over dangling vertices — it gates the NEXT plan, so
+        # these runs go one superstep per chunk, and the mass rides this
+        # superstep's own materialization (df.observe): no extra job.
+        new = one_superstep(scores, damping * dangling_mass(scores, i) / n)
+        dmass_obs[i] = Observation()
+        return (
+            new.join(dflag, "vertex", "left")
+            .observe(dmass_obs[i], F.sum(F.col("score") * F.coalesce(F.col("_d"), F.lit(0.0))).alias("dmass"))
             .select("vertex", "score")
         )
-        return fused, obs
 
-    def step(scores: DataFrame, i: int) -> tuple[DataFrame, object]:
-        new = one_superstep(scores, _extra(scores))
-        if fixed_iters is not None:
-            return new, float("inf")
-        return _fuse_delta(new, scores)
-
-    iters = fixed_iters if fixed_iters is not None else max_iters
-
-    if io is None and n_dangling and dangling == "redistribute":
-        # Directed-graph path: the redistributed mass for superstep i+1
-        # is Σ score_i over dangling vertices — inherently one job per
-        # superstep (extra_i gates the NEXT plan), but BOTH metrics
-        # (L1 delta and next dmass) ride the superstep's own
-        # materialization via observe: one job, not three. dmass_0 is
-        # analytic under the uniform init (n_dangling/n); with a warm
-        # start the seed is not uniform, so dmass_0 must be measured
-        # over scores0 — otherwise the first superstep redistributes
-        # the wrong mass and fixed_iters runs diverge from true power
-        # iteration from the seed (same fixpoint, wrong trajectory).
-        dflag = dang.withColumn("_d", F.lit(1.0))
-        scores = scores0.persist()
-        if start_scores is not None:
-            dmass = float(
-                scores.join(dang, "vertex", "left_semi").agg(F.sum("score")).first()[0] or 0.0
-            )
-        else:
-            dmass = n_dangling * (1.0 / n)
-        deltas = []
-        done = 0
-        for it in range(iters):
-            new = one_superstep(scores, damping * dmass / n)
-            obs = Observation()
-            fused = (
-                new.join(scores.select("vertex", F.col("score").alias("_old")), "vertex")
-                .join(dflag, "vertex", "left")
-                .observe(
-                    obs,
-                    F.sum(F.abs(F.col("score") - F.col("_old"))).alias("delta"),
-                    F.sum(F.col("score") * F.coalesce(F.col("_d"), F.lit(0.0))).alias("dmass"),
-                )
-                .select("vertex", "score")
-                .localCheckpoint(eager=True)
-            )
-            delta = float(obs.get["delta"])
-            dmass = float(obs.get["dmass"] or 0.0)
-            deltas.append(delta)
-            scores.unpersist()
-            scores = fused
-            done = it + 1
-            if fixed_iters is None and delta <= tol:
-                break
-        vdeg.unpersist()
-        ew.unpersist()
-        return PageRankResult(scores, done, deltas)
-
-    if io is None and check_every > 1 and not (n_dangling and dangling == "redistribute"):
-        # Chunked fast path: chain check_every supersteps lazily, one job
-        # per chunk (localCheckpoint truncates the plan at chunk ends).
-        # no eager count: the first chunk job materializes the cache
-        scores = scores0.persist()
-        deltas: list[float] = []
-        done = 0
-        while done < iters:
-            k = min(check_every, iters - done)
-            new = scores
-            for _ in range(k):
-                new = one_superstep(new)
-            if fixed_iters is None:
-                # the chunk's delta rides the checkpoint job (df.observe):
-                # ONE job per chunk, not checkpoint + delta-agg
-                new, obs = _fuse_delta(new, scores)
-            new = new.localCheckpoint(eager=True)
-            done += k
-            if fixed_iters is None:
-                delta = float(obs.get["delta"])
-                deltas.append(delta)
-                scores.unpersist()
-                scores = new
-                if delta <= tol * k:
-                    # The k-step displacement <= tol*k does NOT bound the
-                    # last single-step delta for a general contraction —
-                    # confirm with ONE extra superstep whose own delta
-                    # must be <= tol (a single job at the very end; loop
-                    # continues if the confirmation fails).
-                    confirm, obs1 = _fuse_delta(one_superstep(scores), scores)
-                    confirm = confirm.localCheckpoint(eager=True)
-                    d1 = float(obs1.get["delta"])
-                    done += 1
-                    deltas.append(float(d1))
-                    scores.unpersist()
-                    scores = confirm
-                    if d1 <= tol:
-                        break
-            else:
-                deltas.append(float("inf"))
-                scores.unpersist()
-                scores = new
-        vdeg.unpersist()
-        ew.unpersist()
-        return PageRankResult(scores, done, deltas)
-
-    res = iterate(scores0, step, max_iters=iters, tol=tol if fixed_iters is None else -1.0,
-                  io=io, kernel="pagerank", run_id=run_id)
+    res = iterate(
+        scores0,
+        step,
+        max_iters=fixed_iters if fixed_iters is not None else max_iters,
+        tol=tol,
+        io=io,
+        kernel="pagerank",
+        run_id=run_id,
+        check_every=1 if redistribute else check_every,
+        change=None if fixed_iters is not None else (lambda new, old: F.abs(new - old)),
+    )
     vdeg.unpersist()
     ew.unpersist()
     return PageRankResult(res.state, res.iterations, res.deltas)

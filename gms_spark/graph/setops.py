@@ -88,10 +88,9 @@ def batch_intersect(rows_a, rows_b) -> tuple[np.ndarray, np.ndarray, np.ndarray]
     arrays. Returns (values, counts, row_of_value): all matched values
     concatenated, per-row match counts, and each value's row index.
 
-    One concatenate + one searchsorted for the entire batch — the
-    offsets+values formulation (same pattern as pagerank_csr's segmented
-    gather) that replaces interpreter-bound per-row np.intersect1d calls
-    (~10-30× on the many-tiny-arrays shape mining kernels produce).
+    One concatenate + one searchsorted for the entire batch — an
+    offsets+values formulation that replaces interpreter-bound per-row
+    np.intersect1d calls (~10-30× on the many-tiny-arrays shape mining kernels produce).
     Rows are disambiguated by keying value + row·base with base >
     max(value); keys stay globally sorted because each row is sorted.
     Falls back to the per-row loop if keys would overflow int64.

@@ -44,14 +44,16 @@ def bfs(edges: DataFrame, source: int, max_iters: int = 200) -> DataFrame:
             .distinct()
             .join(dist.select("vertex"), "vertex", "left_anti")
         )
-        # delta = rows added this level = rows at the new depth, a Column
-        # aggregate over the FINAL state: iterate's aggregate action
-        # materializes the level's lazy localCheckpoint + cache and
-        # returns the scalar in the SAME job — one job per level.
-        new = dist.unionAll(cand)
-        return new, F.sum(F.when(F.col("dist") == i + 1, 1).otherwise(0))
+        return dist.unionAll(cand)
 
-    res = iterate(dist0, step, max_iters=max_iters, tol=0.0, kernel="bfs", truncate_every=1)
+    # delta = rows added this level = rows at the new depth, a Column
+    # aggregate over the FINAL state: iterate's aggregate action
+    # materializes the level's lazy localCheckpoint + cache and returns
+    # the scalar in the SAME job — one job per level.
+    res = iterate(
+        dist0, step, max_iters=max_iters, tol=0.0, kernel="bfs",
+        delta=lambda i: F.sum(F.when(F.col("dist") == i + 1, 1).otherwise(0)),
+    )
     if res.deltas and res.deltas[-1] > 0:
         raise RuntimeError(f"bfs did not converge within {max_iters} rounds")
     return res.state
@@ -187,7 +189,7 @@ def sssp(weighted_edges: DataFrame, source: int, max_iters: int = 200) -> DataFr
         # improved-row count is a Column aggregate iterate resolves on
         # the SAME job that fills the round's checkpoint + cache: one
         # Bellman–Ford round is ONE job (no compare-join, no recount).
-        merged = (
+        return (
             dist.withColumnRenamed("dist", "_old")
             .join(relax, "vertex", "full")
             .select(
@@ -196,11 +198,9 @@ def sssp(weighted_edges: DataFrame, source: int, max_iters: int = 200) -> DataFr
                 "_old",
             )
         )
-        return merged, F.sum(
-            F.when(F.col("_old").isNull() | (F.col("dist") < F.col("_old")), 1).otherwise(0)
-        )
 
-    res = iterate(dist0, step, max_iters=max_iters, tol=0.0, kernel="sssp", truncate_every=1)
+    improved = F.sum(F.when(F.col("_old").isNull() | (F.col("dist") < F.col("_old")), 1).otherwise(0))
+    res = iterate(dist0, step, max_iters=max_iters, tol=0.0, kernel="sssp", delta=lambda i: improved)
     if res.deltas and res.deltas[-1] > 0:
         raise RuntimeError(f"sssp did not converge within {max_iters} rounds")
     return res.state.select("vertex", "dist")

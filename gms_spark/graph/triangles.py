@@ -114,30 +114,15 @@ def _oriented_pairs(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count_total(edges: DataFrame, set_backend: str = "sorted") -> int:
-    """Total triangles in a simple undirected (symmetrized) graph.
-
-    ``set_backend`` picks the per-edge intersection kernel — the Set
-    concept's backend menu (GMS selects sorted vectors vs roaring vs
-    hash sets per kernel): "sorted" (default) is the flattened
-    searchsorted of setops.batch_intersect; "bitmap" is the
-    range-compressed bit-packed kernel of graph/bitset.py, which wins
-    when neighborhoods are dense in the id space (post-RelabelByDegree
-    hub blocks). Identical counts either way (tested)."""
-    if set_backend not in ("sorted", "bitmap"):
-        raise ValueError(f"unknown set_backend {set_backend!r}")
+def triangle_count_total(edges: DataFrame) -> int:
+    """Total triangles in a simple undirected (symmetrized) graph."""
     pairs = _oriented_pairs(edges)
 
     def count(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if set_backend == "bitmap":
-                from gms_spark.graph.bitset import batch_intersect_count
-
-                counts = batch_intersect_count(pdf["neigh_u"], pdf["neigh_v"])
-            else:
-                # one flattened searchsorted for the whole Arrow batch —
-                # no per-row python loop (see setops.batch_intersect)
-                _, counts, _ = batch_intersect(pdf["neigh_u"], pdf["neigh_v"])
+            # one flattened searchsorted for the whole Arrow batch —
+            # no per-row python loop (see setops.batch_intersect)
+            _, counts, _ = batch_intersect(pdf["neigh_u"], pdf["neigh_v"])
             yield pd.DataFrame({"t": [int(counts.sum())]})
 
     part = pairs.select("neigh_u", "neigh_v").mapInPandas(count, "t long")

@@ -1,24 +1,51 @@
-"""Generic superstep loop: iterate(state, step_fn) with checkpoint/resume.
+"""The engine's one superstep loop: iterate(state, step) with chunking,
+checkpoint/resume and per-partition lineage.
 
 The Spark replacement for the reference's in-memory kernel loops
 (e.g. PageRank's trial loop gms/representations/graphs/log_graph/pr.cc:38-59,
-CC's change-flag loop cc.cc:41-59): each superstep is one Spark job over
-DataFrames; convergence is a driver-side decision on a scalar the step
-reports (delta-norm / changed-count), exactly where the reference reads
-its error/change flag.
+CC's change-flag loop cc.cc:41-59). A kernel supplies only its LAZY round
+``step(state, i) -> new_state`` and how to measure progress; the loop owns
+chaining, materialization, convergence and durability.
 
-Scale design notes:
-  * The state DataFrame is persisted each step and the previous one
-    unpersisted, so the working set is two small per-vertex tables.
-  * The logical plan is truncated every step — either by the checkpoint
-    write-then-read (when a TableIO is given) or by localCheckpoint —
-    so plan depth does not grow with iteration count (a classic failure
-    mode of iterative DataFrame code).
-  * With a TableIO, every iteration commits an atomic snapshot plus
-    per-partition lineage rows (iteration, partition id, rows, delta
-    norm, wall ms); a relaunch with the same (io, run_id) resumes from
-    the last committed iteration — kill-and-resume yields identical
-    final results (tested in tests/test_superstep_resume.py).
+Chunking: ``check_every = k`` chains k lazy rounds into one plan and
+materializes it with ONE Spark job, which also yields the chunk's delta.
+That is only recompute-free when a round references its incoming state
+exactly once (the chain then carries one copy of each round, not 2^k or
+3^k — see the measured blowups in truncate_plan and components.py).
+
+Materialization:
+  * in memory, a chunk ends in a localCheckpoint, so plan depth stays
+    bounded by k whatever the iteration count;
+  * with a TableIO every superstep commits (k is 1): an atomic parquet
+    snapshot, a persisted re-read, and per-partition lineage rows
+    (iteration, partition id, rows, delta norm, wall ms). A relaunch with
+    the same (io, run_id) resumes after the last committed superstep and
+    applies the same per-superstep work an uninterrupted run would
+    (tests/test_superstep_resume.py).
+
+Delta forms (the scalar the driver compares with ``tol``, read exactly
+where the reference reads its error/change flag):
+  * ``change(new, old)`` — a per-row measure between the chunk's end and
+    its start (L1 term for PageRank, changed flag for CC/coreness), summed
+    by an Observation on the chunk-end ⋈ chunk-start join, so the
+    materializing job computes it. A k-round displacement <= tol·k does
+    not bound the last round's delta, so with tol > 0 such a chunk is
+    confirmed by ONE single-round chunk whose own delta must be <= tol.
+    With tol == 0 the kernel is monotone and a zero chunk delta proves
+    every round in it was a no-op: it stops without an added job.
+  * ``delta(i)`` — an aggregate Column over superstep i's new state, for
+    per-round-truncated kernels whose progress is a property of the new
+    state alone (BFS level size, SSSP improvements, uncolored count). The
+    state is localCheckpointed lazily, persisted, and the aggregate is the
+    action that fills both: one job per round.
+  * neither — a fixed-length run (label propagation, fixed_iters).
+
+``boundary(state)`` is a lazy transform applied to a materialized state
+before the next chunk starts from it — CC's pointer jump, which doubles
+its input and is only cheap on materialized state. The chunk's change is
+measured against its output. It runs at every chunk start after
+superstep 0, so a resumed run applies it exactly where an uninterrupted
+one did.
 """
 
 from __future__ import annotations
@@ -60,14 +87,13 @@ def truncate_plan(df: DataFrame) -> DataFrame:
     Scope note (measured, do not "fix" again): the explosion needs a
     JOIN-BEARING plan segment between truncations — each join multiplies
     the two sides' inherited estimates. Chains of bare
-    ``localCheckpoint(eager=True)`` at CHUNK boundaries (pagerank/
-    components check_every paths, one fused join per chunk) stay flat:
-    measured at depth 20 on the sf0.1 doc graph, bare chaining runs
-    100 supersteps in 19.8 s vs 28.5 s with truncate_plan at every
-    boundary — the extra persist+count pass costs more than the
-    (non-exploding) estimate chain. Use truncate_plan inside superstep
-    loops with join-heavy per-round plans; keep bare localCheckpoint at
-    bounded chunk boundaries.
+    ``localCheckpoint(eager=True)`` at iterate()'s chunk boundaries (one
+    fused join per chunk) stay flat: measured at depth 20 on the sf0.1
+    doc graph, bare chaining runs 100 supersteps in 19.8 s vs 28.5 s with
+    truncate_plan at every boundary — the extra persist+count pass costs
+    more than the (non-exploding) estimate chain. Use truncate_plan
+    inside superstep loops with join-heavy per-round plans; keep bare
+    localCheckpoint at bounded chunk boundaries.
     """
     out = df.localCheckpoint(eager=True).persist()
     out.count()
@@ -83,118 +109,98 @@ def _partition_counts(df: DataFrame) -> list[tuple[int, int]]:
     return [(int(r["partition_id"]), int(r["count"])) for r in rows]
 
 
-def resolve_delta(delta) -> float:
-    """Resolve a step's delta AFTER its state materialized.
+def _observe_change(
+    new: DataFrame, start: DataFrame, change: Callable[[Column, Column], Column]
+) -> tuple[DataFrame, Observation]:
+    """Ride Σ change(new value, start value) on the new state's plan: the
+    compare-join runs INSIDE the materialization job (df.observe)."""
+    key, value = start.columns[:2]
+    obs = Observation()
+    fused = (
+        new.join(start.select(key, F.col(value).alias("_old")), key)
+        .observe(obs, F.sum(change(F.col(value), F.col("_old"))).alias("delta"))
+        .select(*new.columns)
+    )
+    return fused, obs
 
-    Steps may return the convergence scalar three ways:
-      float            — computed eagerly inside the step (legacy: a
-                         second Spark job per superstep);
-      Observation      — attached to the new state via ``df.observe``;
-                         the metric (alias ``delta``) is collected BY the
-                         materialization action itself (persist+count,
-                         localCheckpoint(eager=True) and parquet writes
-                         all fire it — verified empirically), so each
-                         superstep is ONE job, no extra driver round trip;
-      callable () -> float — for deltas derived from an observation plus
-                         driver state (e.g. BFS's new-minus-old count);
-      Column           — an aggregate over the FINAL state's columns,
-                         resolved by ``iterate`` itself on the
-                         materialized state (never here). The fastest
-                         form for per-round-truncated kernels: the
-                         aggregate action IS the materialization, so a
-                         truncated round is ONE job (an Observation
-                         through a lazy localCheckpoint resolves to
-                         None — the CollectMetrics node is buried in
-                         the checkpointed RDD; measured, do not retry).
-    """
-    if isinstance(delta, Column):
-        raise TypeError("Column deltas are resolved by iterate() on the materialized state")
-    if isinstance(delta, Observation):
-        v = delta.get["delta"]
-        return float(v) if v is not None else 0.0  # null agg == empty state
-    if callable(delta):
-        return float(delta())
-    return float(delta)
+
+def _observed(obs: Observation | None) -> float:
+    """The chunk's delta once its materialization ran; inf for a
+    fixed-length run, which measures nothing."""
+    if obs is None:
+        return float("inf")
+    v = obs.get["delta"]
+    return float(v) if v is not None else 0.0  # null sum == empty state
 
 
 def iterate(
     state: DataFrame,
-    step: Callable[[DataFrame, int], tuple[DataFrame, object]],
+    step: Callable[[DataFrame, int], DataFrame],
     max_iters: int,
     tol: float = 0.0,
     io: TableIO | None = None,
     kernel: str = "kernel",
     run_id: str | None = None,
-    lineage_detail: bool = True,
-    truncate_every: int = 3,
+    check_every: int = 1,
+    change: Callable[[Column, Column], Column] | None = None,
+    delta: Callable[[int], Column] | None = None,
+    boundary: Callable[[DataFrame], DataFrame] | None = None,
 ) -> SuperstepResult:
-    """Run ``step(state, i) -> (new_state, delta)`` until delta <= tol.
+    """Run ``step(state, i) -> new_state`` (lazy) until the delta <= tol
+    or ``max_iters`` supersteps have run — see the module docstring.
 
-    ``delta`` semantics are kernel-defined (L1 norm for PageRank, changed
-    row count for CC/LP); the loop stops when ``delta <= tol`` or after
-    ``max_iters`` supersteps. ``delta`` may be a float, an ``Observation``
-    riding the new state, or a 0-arg callable — see ``resolve_delta``.
-
-    ``truncate_every`` trades the hard-truncation job against chained-plan
-    analysis cost: a persisted-but-uncheckpointed state chain still
-    propagates sizeInBytes estimates through the LOGICAL plan, so
-    Catalyst's per-action analysis cost grows superlinearly with chain
-    depth (measured on an 11-superstep PageRank, 8 cores: per-step
-    materialization 0.8s at depth 1 → 2.1s → 5.8s → 12.3s at depth 5).
-    Measured totals small-graph / scale-14 R-MAT: every=1 → 8.3s/4.4s,
-    every=2 → 5.8/3.3, every=3 → 5.1/3.3 (best), every=6 → 27.0/28.7.
+    ``state`` is a (key, value, ...) table; ``change`` compares its second
+    column on the first. At most one of ``change`` and ``delta`` is given;
+    with neither, the run is fixed-length. ``check_every`` is ignored when
+    ``io`` is given: durable runs commit every superstep.
     """
+    if io is not None and delta is not None:
+        # No durable kernel measures an aggregate over its new state
+        # (pagerank/components/labelprop use change or nothing). Wiring
+        # it is easy — aggregate the committed re-read — but dead paths
+        # rot: implement it when a kernel needs it.
+        raise NotImplementedError("delta Columns are not supported with durable io")
     spark = state.sparkSession
     run_id = run_id or uuid.uuid4().hex[:12]
     table = f"{kernel}_state_{run_id}"
     deltas: list[float] = []
-    start_iter = 0
+    i = 0
     resumed_from = None
 
     if io is not None:
+        check_every = 1
         last = io.last_committed(table)
         if last is not None:
             state = io.read(spark, table, last)
-            start_iter = last + 1
+            i = last + 1
             resumed_from = last
             prior = [r for r in io.lineage_rows() if r.get("run_id") == run_id and r.get("kernel") == kernel]
-            by_iter: dict[int, float] = {}
-            for r in prior:
-                by_iter[int(r["iteration"])] = float(r["delta_norm"])
-            deltas = [by_iter[i] for i in sorted(by_iter) if i <= last]
+            by_iter = {int(r["iteration"]): float(r["delta_norm"]) for r in prior}
+            deltas = [by_iter[j] for j in sorted(by_iter) if j <= last]
             if deltas and deltas[-1] <= tol:
-                return SuperstepResult(state, start_iter, deltas, resumed_from)
+                return SuperstepResult(state, i, deltas, resumed_from)
 
+    # no eager count: the first chunk's job fills the cache
     state = state.persist()
-    state.count()
-
-    i = start_iter
+    k_next = check_every
     while i < max_iters:
         t0 = time.time()
-        new_state, delta = step(state, i)
-        if io is not None and isinstance(delta, Column):
-            # No current kernel combines a durable TableIO with a Column
-            # delta (pagerank/components/labelprop all use Observations,
-            # whose metrics the parquet write fires). Wiring it is easy —
-            # aggregate the committed re-read — but dead paths rot:
-            # implement it when a kernel needs it.
-            raise NotImplementedError("Column deltas are not supported with durable io")
+        k = min(k_next, max_iters - i)
+        start = boundary(state) if boundary is not None and i > 0 else state
+        new = start
+        for j in range(i, i + k):
+            new = step(new, j)
+        obs = None
+        if change is not None:
+            new, obs = _observe_change(new, start, change)
         if io is not None:
-            # The parquet job fires any Observation riding new_state;
-            # resolve inside the meta callback (exactly once) so the
-            # commit marker still records the delta.
-            holder: dict[str, float] = {}
-
-            def _meta():
-                holder["delta"] = resolve_delta(delta)
-                return {"delta": holder["delta"]}
-
-            io.write(new_state, table, i, meta=_meta)
-            delta = holder["delta"]
-            committed = io.read(spark, table, i).persist()
-            committed.count()
+            # The parquet job fires the Observation; the meta callback
+            # runs after it, so the commit marker records the delta.
+            io.write(new, table, i, meta=lambda: {"delta": _observed(obs)})
+            d = _observed(obs)
+            new = io.read(spark, table, i).persist()
+            new.count()
             wall_ms = (time.time() - t0) * 1000.0
-            parts = _partition_counts(committed) if lineage_detail else [(-1, committed.count())]
             io.append_lineage(
                 spark,
                 [
@@ -204,46 +210,34 @@ def iterate(
                         "iteration": i,
                         "partition_id": pid,
                         "rows": cnt,
-                        "delta_norm": float(delta),
+                        "delta_norm": d,
                         "wall_ms": wall_ms,
                         "committed_at": time.time(),
                     }
-                    for pid, cnt in parts
+                    for pid, cnt in _partition_counts(new)
                 ],
             )
-            state.unpersist()
-            state = committed
+        elif delta is not None:
+            # ONE job: the aggregate action computes the plan and fills
+            # the lazy localCheckpoint + cache (an Observation through a
+            # lazy localCheckpoint resolves to None — the CollectMetrics
+            # node is buried in the checkpointed RDD; measured, do not
+            # retry). The persist keeps join-heavy rounds' size
+            # estimates flat (truncate_plan).
+            new = new.localCheckpoint(eager=False).persist()
+            d = float(new.agg(delta(i + k - 1).alias("delta")).first()["delta"] or 0)
         else:
-            # No durable checkpoint: persist each step (keeps Catalyst's
-            # outputPartitioning metadata, so the next superstep's joins
-            # on the same key need NO extra shuffle) and hard-truncate the
-            # plan only every `truncate_every` steps — localCheckpoint
-            # erases partitioning info, which would force a reshuffle of
-            # the state side every superstep. Keep the chain SHORT: see
-            # the docstring's measured analysis-cost growth per depth.
-            if isinstance(delta, Column):
-                # ONE job per superstep: the aggregate action computes
-                # the plan, fills the cache (and the lazy localCheckpoint
-                # on truncation rounds), and returns the delta scalar —
-                # no separate count pass. Requires the delta to be an
-                # aggregate over the FINAL state's columns.
-                if truncate_every > 0 and (i + 1) % truncate_every == 0:
-                    new_state = new_state.localCheckpoint(eager=False).persist()
-                else:
-                    new_state = new_state.persist()
-                delta = float(new_state.agg(delta.alias("delta")).first()["delta"] or 0)
-            else:
-                if truncate_every > 0 and (i + 1) % truncate_every == 0:
-                    new_state = truncate_plan(new_state)
-                else:
-                    new_state = new_state.persist()
-                    new_state.count()
-                delta = resolve_delta(delta)  # fired by the materialization above
-            state.unpersist()
-            state = new_state
-        deltas.append(float(delta))
-        i += 1
-        if delta <= tol:
-            break
+            new = new.localCheckpoint(eager=True)
+            d = _observed(obs)
+        state.unpersist()
+        state = new
+        deltas.append(d)
+        i += k
+        if d <= tol * k:
+            if k == 1 or tol <= 0:
+                break
+            k_next = 1  # confirm: one more superstep, its own delta <= tol
+        else:
+            k_next = check_every
 
     return SuperstepResult(state, i, deltas, resumed_from)

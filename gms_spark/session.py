@@ -10,9 +10,12 @@ Single place to pin the configs that matter at scale:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+logger = logging.getLogger("gms_spark.session")
 
 
 def _warm_session(spark: SparkSession) -> None:
@@ -27,7 +30,10 @@ def _warm_session(spark: SparkSession) -> None:
     cost out of query time (heavyweight init once per session, the same
     rule as per-task model init in the Arrow kernels). Touches no input
     data and caches nothing: every later query still computes from its
-    own inputs; this only compiles code paths.
+    own inputs; this only compiles code paths. Its joins have a 13-row
+    side, so under the 64 MB broadcast threshold they plan as broadcast
+    hash joins: the warmup compiles neither the shuffled-hash nor the
+    sort-merge join path.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
@@ -61,8 +67,8 @@ def _warm_session(spark: SparkSession) -> None:
     except Exception:
         # warmup is best-effort: a failure here must never break
         # session construction (e.g. a stripped-down pyspark without
-        # Arrow keeps working, just cold)
-        pass
+        # Arrow keeps working, just cold) — but it must not pass unseen
+        logger.warning("session warmup failed; queries will pay first-use costs", exc_info=True)
 
 
 def get_spark(
@@ -96,9 +102,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Iterative SpMV joins a big static edge table with a small scores
-        # table every superstep: shuffled-hash beats sort-merge (no
-        # re-sort of the edge side each iteration).
+        # Lets the planner consider a shuffled-hash join where it would
+        # otherwise sort-merge. It does not pin the superstep SpMV join:
+        # plan probes show that join as a broadcast hash join under the
+        # 64 MB threshold and a sort-merge join with broadcasts off —
+        # never a shuffled-hash join — in either setting of this flag.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.driver.memory", os.environ.get("GMS_SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")

@@ -82,3 +82,20 @@ def test_pages_graph_runs_pagerank(spark):
     scores = res.scores.collect()
     assert sum(r["score"] for r in scores) == pytest.approx(1.0, abs=1e-6)
     assert len(scores) > 50
+
+
+def test_id_assigners_leave_no_cached_frames(spark):
+    """The range-sampled id assigners pin their one evaluation with an
+    eager checkpoint; the range-partitioned frame they persist on the way
+    must be released, so neither a url dictionary build nor a dense rank
+    leaves a cache-manager entry behind."""
+    from gms_spark.graph.build import dense_rank_ids
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    url_dict, edges = edges_from_pages(synth_pages(spark, 60, partitions=3))
+    edges.count()
+    assert cache.isEmpty()
+    ranked = dense_rank_ids(spark.range(40).selectExpr("id % 7 as k"), "k")
+    assert sorted({r["id"] for r in ranked.collect()}) == list(range(7))
+    assert cache.isEmpty()
