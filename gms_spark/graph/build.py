@@ -62,14 +62,23 @@ def stage_edges(df: DataFrame) -> DataFrame:
     every round's scan (measured ~1.6× slower per CC round at sf0.1),
     while checkpoint blocks deserialize fast. Edges are re-joined
     against a broadcast or reshuffled state anyway, so only scan speed
-    matters. A caller-persisted input is returned unchanged
-    (their cache, their policy). Checkpoint blocks are reclaimed by the
-    ContextCleaner once the frame is unreferenced; on a real cluster a
-    durable TableIO snapshot plays this role instead.
+    matters. A caller-persisted or already-checkpointed input (a bare
+    checkpoint, not a frame derived from one) is returned unchanged:
+    copying it again buys nothing. Checkpoint blocks are reclaimed by
+    the ContextCleaner once the frame is unreferenced; on a real cluster
+    a durable TableIO snapshot plays this role instead.
     """
-    if df.is_cached:
+    if df.is_cached or _is_checkpointed(df):
         return df
     return df.localCheckpoint(eager=True)
+
+
+def _is_checkpointed(df: DataFrame) -> bool:
+    """True when ``df`` is a materialized (local) checkpoint itself: its
+    analyzed plan is a LogicalRDD over a checkpointed RDD. A frame built
+    from a plain RDD is a LogicalRDD too, but its RDD is not checkpointed."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().isCheckpointed()
 
 
 def vertices(edges: DataFrame) -> DataFrame:

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from gms_spark.graph.build import degrees, vertices
-from gms_spark.runtime.superstep import iterate, truncate_plan
+from gms_spark.runtime.superstep import count_where, iterate, truncate_plan
 
 
 @dataclass
@@ -56,6 +56,11 @@ class ColoringResult:
     colors: DataFrame  # (vertex, color)
     rounds: int
     n_colors: int
+
+
+def _uncolored(state: DataFrame, i: int) -> int:
+    """iterate() delta of every coloring kernel: the uncolored count."""
+    return count_where(state, F.col("color").isNull())
 
 
 def jp_color(
@@ -148,32 +153,16 @@ def jp_color(
             F.col("own_prio").alias("prio"),
         )
 
-    state = state0.persist()
-    state.count()
-    rounds = 0
-    uncolored = None
-    while rounds < max_iters:
-        k = min(chunk, max_iters - rounds)
-        new = state
-        for _ in range(k):
-            new = one_round(new)
-        # one job per chunk: the aggregate materializes the lazy
-        # checkpoint + cache and returns the uncolored count
-        new = new.localCheckpoint(eager=False).persist()
-        uncolored = int(
-            new.agg(F.sum(F.when(F.col("color").isNull(), 1).otherwise(0)).alias("d")).first()["d"] or 0
-        )
-        state.unpersist()
-        state = new
-        rounds += k
-        if uncolored == 0:
-            break
+    res = iterate(
+        state0, lambda state, i: one_round(state), max_iters=max_iters, tol=0.0, kernel=kernel,
+        check_every=chunk, delta=_uncolored,
+    )
     ep.unpersist()
-    if uncolored:
-        raise RuntimeError(f"{kernel}: {uncolored} vertices uncolored after {max_iters} rounds")
-    colors = state.select("vertex", "color")
+    if res.deltas and res.deltas[-1] > 0:
+        raise RuntimeError(f"{kernel}: {int(res.deltas[-1])} vertices uncolored after {max_iters} rounds")
+    colors = res.state.select("vertex", "color")
     n_colors = colors.agg(F.countDistinct("color")).first()[0]
-    return ColoringResult(colors, rounds, int(n_colors))
+    return ColoringResult(colors, res.iterations, int(n_colors))
 
 
 def jp_random(edges: DataFrame, seed: int = 27491095, max_iters: int = 500) -> ColoringResult:
@@ -268,9 +257,7 @@ def johansson(edges: DataFrame, seed: int = 5, max_iters: int = 500) -> Coloring
             F.coalesce("color", F.when(F.col("_bad").isNull(), F.col("pick"))).alias("color"),
         )
 
-    # uncolored count as a Column delta — one job/round, see jp_color
-    uncolored = F.sum(F.when(F.col("color").isNull(), 1).otherwise(0))
-    res = iterate(state0, step, max_iters=max_iters, tol=0.0, kernel="coloring_johansson", delta=lambda i: uncolored)
+    res = iterate(state0, step, max_iters=max_iters, tol=0.0, kernel="coloring_johansson", delta=_uncolored)
     if res.deltas and res.deltas[-1] > 0:
         raise RuntimeError(f"johansson: {int(res.deltas[-1])} vertices uncolored after {max_iters} rounds")
     colors = res.state.select("vertex", "color")
@@ -413,17 +400,17 @@ def barenboim(
     edges = stage_edges(edges)
     max_deg = int(degrees(edges).agg(F.max("degree")).first()[0] or 0)
     palette_n = max_deg + 1
-    verts = vertices(edges)
-    state = (
+    # materialized up front, unlike iterate()'s lazy persist of its
+    # input: a checkpoint keeps adaptive execution's coalesced partitions
+    # and the filled cache gives round 0 real sizes to plan against
+    # (measured at sf0.01: a third of the tasks of a lazy start)
+    state = truncate_plan(
         state0 if state0 is not None
-        else verts.select("vertex", F.lit(None).cast("long").alias("color"))
+        else vertices(edges).select("vertex", F.lit(None).cast("long").alias("color"))
     )
-    state = truncate_plan(state)
-    n = verts.count()
 
     def one_shot(state: DataFrame, active: DataFrame | None, i: int):
-        """One speculative round; returns the lazy new state (the caller
-        materializes it and reads the uncolored count off that job)."""
+        """One speculative round; returns the lazy new state."""
         salt = _round_salt(i, seed)
         cand = state.where(F.col("color").isNull()).select("vertex")
         if active is not None:
@@ -471,22 +458,14 @@ def barenboim(
         # count instead of None, so the caller's guards see the truth
         # rather than a silently-NULL-colored state.
         if rounds <= 0:
-            return state, int(state.where(F.col("color").isNull()).count()), i0
-        uncolored = None
-        i = i0
-        for _ in range(rounds):
-            # one job/round: the aggregate action materializes the lazy
-            # localCheckpoint + cache and returns the uncolored count
-            new = one_shot(state, active, i).localCheckpoint(eager=False).persist()
-            uncolored = int(
-                new.agg(F.sum(F.when(F.col("color").isNull(), 1).otherwise(0)).alias("d")).first()["d"] or 0
-            )
-            state.unpersist()
-            state = new
-            i += 1
-            if uncolored == 0:
-                break
-        return state, uncolored, i
+            return state, _uncolored(state, i0), i0
+        # i0 offsets the round index, so every phase draws the salts of
+        # its global rounds
+        res = iterate(
+            state, lambda s, j: one_shot(s, active, i0 + j), max_iters=rounds, tol=0.0,
+            kernel="coloring_barenboim", delta=_uncolored,
+        )
+        return res.state, int(res.deltas[-1]), i0 + res.iterations
 
     # phase 1: everyone, ceil(log Δ / log(16/15)) rounds (:105-110)
     p1 = max(1, math.ceil(math.log(max(max_deg, 2)) / math.log(16.0 / 15.0)))
@@ -494,7 +473,7 @@ def barenboim(
 
     if uncolored:
         # split remaining uncolored at uncolored-degree Δ̂ = ln n (:117-151)
-        delta_hat = max(1.0, math.log(max(n, 2)))
+        delta_hat = max(1.0, math.log(max(state.count(), 2)))
         unc = state.where(F.col("color").isNull()).select("vertex")
         udeg = (
             edges.join(unc.withColumnRenamed("vertex", "src"), "src", "left_semi")
@@ -553,7 +532,9 @@ def elkin(
     edges = stage_edges(edges)
     max_deg = int(degrees(edges).agg(F.max("degree")).first()[0] or 0)
     palette_n = max_deg + 1
-    n = vertices(edges).count()
+    # materialized up front for the reason given in barenboim
+    state0 = truncate_plan(vertices(edges).select("vertex", F.lit(None).cast("long").alias("color")))
+    n = state0.count()
     # (Pre-partitioning the edge table by src + persist was tried and
     # measured SLOWER here: the columnar cache's per-round scan cost
     # exceeds the exchange it saves — see stage_edges' checkpoint-vs-
@@ -564,16 +545,14 @@ def elkin(
     # the DuckDB oracle replays the schedule bit-for-bit
     ed, t_fp = _elkin_params_fp(n, max_deg)
 
-    state = truncate_plan(
-        vertices(edges).select("vertex", F.lit(None).cast("long").alias("color"))
-    )
     d_fp = max_deg * ELKIN_S
-    i = 0
     uncolored = n
     colors_tbl = F.broadcast(
         edges.sparkSession.range(1, palette_n + 1).select(F.col("id").alias("c"))
     )
-    while uncolored and i < max_iters:
+
+    def step(state: DataFrame, i: int):
+        nonlocal d_fp
         # int(p_pre · P) with p_pre = (d+εΔ)/(d+1), exact in integers
         thresh_i = ((d_fp + ed) * ARITH_P) // (d_fp + ELKIN_S)
         d_fp = _elkin_dnext_fp(d_fp, ed, t_fp)
@@ -642,10 +621,6 @@ def elkin(
         keep = picked.where(F.col("idx") == pick_mix % F.col("cnt")).select(
             "vertex", F.col("c").alias("new_color")
         )
-        # one job/round: the aggregate materializes the lazy checkpoint
-        # + cache and returns the uncolored count (see superstep.py on
-        # why an Observation cannot ride a lazy checkpoint).
-        #
         # Do NOT chain multiple lazy rounds per job here (the H-index
         # coreness check_every trick): an Elkin round references the
         # incoming state ~4x (unc, used-colors, the conflict side, and
@@ -656,22 +631,23 @@ def elkin(
         # single chunk ran longer than the whole unchunked query.
         # check_every-style chunking is only safe for rounds whose plan
         # is linear in the state (coreness qualifies; this does not).
-        new = (
-            state.join(keep, "vertex", "left")
-            .select("vertex", F.coalesce("color", "new_color").alias("color"))
-            .localCheckpoint(eager=False)
-            .persist()
+        return state.join(keep, "vertex", "left").select(
+            "vertex", F.coalesce("color", "new_color").alias("color")
         )
-        now = int(
-            new.agg(F.sum(F.when(F.col("color").isNull(), 1).otherwise(0)).alias("d")).first()["d"] or 0
-        )
+
+    def progress(state: DataFrame, i: int) -> int:
+        # a round that colors nobody stops the loop (returns 0) and
+        # hands off to the finisher (made_progress, :113)
+        nonlocal uncolored
+        now = _uncolored(state, i)
         newly = uncolored - now
         uncolored = now
-        state.unpersist()
-        state = new
-        i += 1
-        if uncolored and newly == 0:
-            break  # no progress — hand off (made_progress, :113)
+        return now if newly else 0
+
+    res = iterate(
+        state0, step, max_iters=max_iters if n else 0, tol=0.0, kernel="coloring_elkin", delta=progress
+    )
+    state, i = res.state, res.iterations
 
     if stats_out is not None:
         stats_out["elkin_rounds"] = i

@@ -25,7 +25,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gms_spark.runtime.superstep import iterate, truncate_plan
+from gms_spark.runtime.superstep import count_where, iterate
+
+
+def _top_down(edges: DataFrame, dist: DataFrame, i: int) -> DataFrame:
+    """(vertex) first reached at level i + 1: the level-i frontier's
+    neighbors that ``dist`` does not hold yet."""
+    frontier = dist.where(F.col("dist") == i).select(F.col("vertex").alias("src"))
+    return (
+        edges.join(frontier, "src")
+        .select(F.col("dst").alias("vertex"))
+        .distinct()
+        .join(dist.select("vertex"), "vertex", "left_anti")
+    )
 
 
 def bfs(edges: DataFrame, source: int, max_iters: int = 200) -> DataFrame:
@@ -37,22 +49,12 @@ def bfs(edges: DataFrame, source: int, max_iters: int = 200) -> DataFrame:
     dist0 = spark.createDataFrame([(source, 0)], "vertex long, dist long")
 
     def step(dist: DataFrame, i: int):
-        frontier = dist.where(F.col("dist") == i)
-        cand = (
-            edges.join(frontier.withColumnRenamed("vertex", "src"), "src")
-            .select(F.col("dst").alias("vertex"), F.lit(i + 1).alias("dist"))
-            .distinct()
-            .join(dist.select("vertex"), "vertex", "left_anti")
-        )
-        return dist.unionAll(cand)
+        return dist.unionAll(_top_down(edges, dist, i).select("vertex", F.lit(i + 1).alias("dist")))
 
-    # delta = rows added this level = rows at the new depth, a Column
-    # aggregate over the FINAL state: iterate's aggregate action
-    # materializes the level's lazy localCheckpoint + cache and returns
-    # the scalar in the SAME job — one job per level.
+    # delta = rows added this level = rows at the new depth
     res = iterate(
         dist0, step, max_iters=max_iters, tol=0.0, kernel="bfs",
-        delta=lambda i: F.sum(F.when(F.col("dist") == i + 1, 1).otherwise(0)),
+        delta=lambda dist, i: count_where(dist, F.col("dist") == i + 1),
     )
     if res.deltas and res.deltas[-1] > 0:
         raise RuntimeError(f"bfs did not converge within {max_iters} rounds")
@@ -71,18 +73,18 @@ def bfs_direction_optimizing(
     edges_to_check = edges not yet scanned top-down) and return top-down
     when the awake count drops under ``n / beta``.
       top-down  — frontier ⋈ edges, shuffle ∝ edges OUT of the frontier;
-                  right when the frontier is thin.
+                  right when the frontier is thin (``bfs``'s level).
       bottom-up — unvisited LEFT-SEMI (edges ⋉ frontier): each unvisited
                   vertex is emitted AT MOST ONCE (the semi-join is
                   Spark's analog of the reference's early-exit parent
                   scan), so the wide middle levels of a low-diameter web
                   graph never materialize the frontier×degree blow-up
                   that top-down + distinct would.
-    The per-level frontier stats (count + Σdegree) are aggregated by the
-    SAME action that materializes the level — GAPBS's negative-degree
-    parent encoding trick (bfs.cc:30-37) re-expressed as a fused
-    aggregate, so the switch costs NO extra job. Identical distances to
-    bfs() by construction (same level sets).
+    The state carries each vertex's degree, so the new level's stats
+    (count + Σdegree) are one aggregate over it — the level's only job,
+    GAPBS's negative-degree parent encoding trick (bfs.cc:30-37)
+    re-expressed as that fused aggregate, so the switch costs NO extra
+    job. Identical distances to bfs() by construction (same level sets).
     """
     from gms_spark.graph.build import degrees, stage_edges, vertices
 
@@ -92,77 +94,56 @@ def bfs_direction_optimizing(
     verts = vertices(edges).persist()
     n = verts.count()
     m = edges.count()  # directed edge slots (both directions of und)
-    dist = spark.createDataFrame([(source, 0)], "vertex long, dist long").persist()
-    frontier = dist.select("vertex")
-    olds = []
+    # every level's frontier filter and stats aggregate scan the whole
+    # state: a one-row seed spread over the default parallelism would
+    # add empty tasks to each of them
+    dist0 = (
+        spark.createDataFrame([(source, 0)], "vertex long, dist long").coalesce(1).join(deg, "vertex", "left")
+    )
     scout = int(deg.where(F.col("vertex") == source).agg(F.sum("degree")).first()[0] or 0)
     edges_to_check = m
     awake = 1
     bottom_up = False
-    i = 0
-    while i < max_iters:
+
+    def step(dist: DataFrame, i: int):
+        nonlocal bottom_up
         if not bottom_up and scout > edges_to_check / alpha:
             bottom_up = True
         elif bottom_up and awake < n / beta:
             bottom_up = False
         if bottom_up:
-            # bottom-up: scan the UNVISITED side's own edges and keep
-            # vertices with any neighbor in the frontier — work ∝ edges
-            # incident to unvisited, not ∝ Σdeg(frontier)
-            unvisited = verts.join(dist.select("vertex"), "vertex", "left_anti")
+            # scan the UNVISITED side's own edges and keep vertices with
+            # any neighbor in the frontier — work ∝ edges incident to
+            # unvisited, not ∝ Σdeg(frontier)
+            frontier = dist.where(F.col("dist") == i).select(F.col("vertex").alias("dst"))
             cand = (
-                unvisited.withColumnRenamed("vertex", "src")
+                verts.join(dist.select("vertex"), "vertex", "left_anti")
+                .withColumnRenamed("vertex", "src")
                 .join(edges, "src")
-                .join(frontier.withColumnRenamed("vertex", "dst"), "dst", "left_semi")
+                .join(frontier, "dst", "left_semi")
                 .select(F.col("src").alias("vertex"))
                 .distinct()
             )
         else:
-            cand = (
-                edges.join(frontier.withColumnRenamed("vertex", "src"), "src")
-                .select(F.col("dst").alias("vertex"))
-                .distinct()
-                .join(dist.select("vertex"), "vertex", "left_anti")
-            )
-        # ONE job per level: the (count, Σdegree) aggregate action
-        # materializes the new frontier's lazy localCheckpoint + cache
-        # AND — through the left_anti against it — the previous level's
-        # lazily-checkpointed dist union. The degree column rides the
-        # materialized frame so the switch stats come from a direct
-        # aggregate (an Observation through a lazy checkpoint resolves
-        # to None — see runtime/superstep.py). Estimates stay bounded:
-        # every leaf is a materialized cache or LogicalRDD.
-        nxt = (
-            cand.select("vertex", F.lit(i + 1).alias("dist"))
-            .join(deg, "vertex", "left")
-            .localCheckpoint(eager=False)
-            .persist()
-        )
-        got = nxt.agg(F.count(F.lit(1)).alias("c"), F.sum("degree").alias("sd")).first()
-        c = int(got["c"] or 0)
+            cand = _top_down(edges, dist, i)
+        return dist.unionAll(cand.select("vertex", F.lit(i + 1).alias("dist")).join(deg, "vertex", "left"))
+
+    def level_stats(dist: DataFrame, i: int) -> int:
+        nonlocal scout, edges_to_check, awake
+        got = dist.where(F.col("dist") == i + 1).agg(F.count(F.lit(1)).alias("c"), F.sum("degree").alias("sd")).first()
         if not bottom_up:
             # GAPBS deducts scouted edges only on TOP-DOWN steps
             # (bfs.cc TDStep call site); bottom-up levels leave the
             # budget untouched, so the switch-back heuristic matches.
             edges_to_check -= scout
         scout = int(got["sd"] or 0)
-        awake = c
-        if c == 0:
-            olds.append(nxt)
-            break
-        olds.append(dist)
-        # lazy: the next level's aggregate action fills this cache
-        dist = dist.unionAll(nxt.select("vertex", "dist")).localCheckpoint(eager=False).persist()
-        olds.append(nxt)
-        frontier = nxt.select("vertex")
-        i += 1
-    olds.append(dist)
-    dist = dist.localCheckpoint(eager=True)
-    for df in olds:
-        df.unpersist()
+        awake = int(got["c"])
+        return awake
+
+    res = iterate(dist0, step, max_iters=max_iters, tol=0.0, kernel="bfs_do", delta=level_stats)
     deg.unpersist()
     verts.unpersist()
-    return dist
+    return res.state.select("vertex", "dist")
 
 
 def sssp(weighted_edges: DataFrame, source: int, max_iters: int = 200) -> DataFrame:
@@ -186,9 +167,8 @@ def sssp(weighted_edges: DataFrame, source: int, max_iters: int = 200) -> DataFr
         )
         # the full join already carries (old dist, relaxed nd) side by
         # side — _old RIDES the materialized state (8 bytes/row) so the
-        # improved-row count is a Column aggregate iterate resolves on
-        # the SAME job that fills the round's checkpoint + cache: one
-        # Bellman–Ford round is ONE job (no compare-join, no recount).
+        # improved-row count is an aggregate over the round's own state:
+        # one Bellman–Ford round is ONE job (no compare-join, no recount).
         return (
             dist.withColumnRenamed("dist", "_old")
             .join(relax, "vertex", "full")
@@ -199,8 +179,11 @@ def sssp(weighted_edges: DataFrame, source: int, max_iters: int = 200) -> DataFr
             )
         )
 
-    improved = F.sum(F.when(F.col("_old").isNull() | (F.col("dist") < F.col("_old")), 1).otherwise(0))
-    res = iterate(dist0, step, max_iters=max_iters, tol=0.0, kernel="sssp", delta=lambda i: improved)
+    improved = F.col("_old").isNull() | (F.col("dist") < F.col("_old"))
+    res = iterate(
+        dist0, step, max_iters=max_iters, tol=0.0, kernel="sssp",
+        delta=lambda state, i: count_where(state, improved),
+    )
     if res.deltas and res.deltas[-1] > 0:
         raise RuntimeError(f"sssp did not converge within {max_iters} rounds")
     return res.state.select("vertex", "dist")
@@ -227,15 +210,13 @@ def sssp_delta_stepping(
     next-bin vote), and the staleness guard (sssp.cc:77) is implicit —
     dist only decreases and b is the dirty minimum. Each round is ONE
     job (relax join + min-aggregate + full-join merge): the dirty count
-    and next-bucket vote are aggregated by the same action that fills
-    the round's lazy localCheckpoint + cache.
+    and next-bucket vote are the round's one aggregate.
 
     ``delta`` defaults to the mean edge weight (GAPBS's CLI default is
     weight-scale-dependent; the mean keeps ~avg-degree relaxations per
     bucket on uniform weights).
     """
     from gms_spark.graph.build import stage_edges
-    from gms_spark.runtime.superstep import truncate_plan
 
     spark = weighted_edges.sparkSession
     weighted_edges = stage_edges(weighted_edges)
@@ -244,12 +225,10 @@ def sssp_delta_stepping(
     if delta <= 0:
         raise ValueError("delta must be positive")
 
-    state = truncate_plan(
-        spark.createDataFrame([(source, 0.0, True)], "vertex long, dist double, dirty boolean")
-    )
+    state0 = spark.createDataFrame([(source, 0.0, True)], "vertex long, dist double, dirty boolean")
     b = 0
-    rounds = 0
-    while rounds < max_rounds:
+
+    def step(state: DataFrame, i: int):
         in_bucket = F.col("dirty") & (F.floor(F.col("dist") / delta) == b)
         frontier = state.where(in_bucket).select("vertex", "dist")
         relax = (
@@ -261,7 +240,7 @@ def sssp_delta_stepping(
         was_frontier = F.coalesce(
             F.col("_dirty") & (F.floor(F.col("_old") / delta) == b), F.lit(False)
         )
-        new = (
+        return (
             state.select("vertex", F.col("dist").alias("_old"), F.col("dirty").alias("_dirty"))
             .join(relax, "vertex", "full")
             .select(
@@ -276,25 +255,23 @@ def sssp_delta_stepping(
                 .otherwise(F.coalesce("_dirty", F.lit(False)))
                 .alias("dirty"),
             )
-            # ONE job per round: this aggregate action materializes the
-            # lazy localCheckpoint + cache and returns both scalars —
-            # the dirty count and the next-bucket vote live in the FINAL
-            # state's columns, so no Observation (which resolves to None
-            # through a lazy checkpoint — see superstep.py) is needed.
-            .localCheckpoint(eager=False)
-            .persist()
         )
-        got = new.agg(
+
+    def dirty_count(state: DataFrame, i: int) -> int:
+        nonlocal b
+        got = state.agg(
             F.sum(F.when(F.col("dirty"), 1).otherwise(0)).alias("n_dirty"),
             F.min(F.when(F.col("dirty"), F.floor(F.col("dist") / delta))).alias("next_b"),
         ).first()
-        state.unpersist()
-        state = new
-        rounds += 1
-        if int(got["n_dirty"] or 0) == 0:
-            return state.select("vertex", "dist")
-        b = int(got["next_b"])
-    raise RuntimeError(f"sssp_delta_stepping did not converge within {max_rounds} rounds")
+        n_dirty = int(got["n_dirty"] or 0)
+        if n_dirty:
+            b = int(got["next_b"])
+        return n_dirty
+
+    res = iterate(state0, step, max_iters=max_rounds, tol=0.0, kernel="sssp_delta", delta=dirty_count)
+    if not res.deltas or res.deltas[-1] > 0:
+        raise RuntimeError(f"sssp_delta_stepping did not converge within {max_rounds} rounds")
+    return res.state.select("vertex", "dist")
 
 
 def jones_plassmann(edges: DataFrame, seed: int = 27491095, max_iters: int = 500):

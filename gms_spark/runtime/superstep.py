@@ -33,11 +33,15 @@ where the reference reads its error/change flag):
     confirmed by ONE single-round chunk whose own delta must be <= tol.
     With tol == 0 the kernel is monotone and a zero chunk delta proves
     every round in it was a no-op: it stops without an added job.
-  * ``delta(i)`` — an aggregate Column over superstep i's new state, for
-    per-round-truncated kernels whose progress is a property of the new
-    state alone (BFS level size, SSSP improvements, uncolored count). The
-    state is localCheckpointed lazily, persisted, and the aggregate is the
-    action that fills both: one job per round.
+  * ``delta(state, i) -> float`` — a driver-side measure of the chunk's
+    end state, for kernels whose progress is a property of the new state
+    alone (BFS level size, SSSP improvements, uncolored count). The loop
+    hands it the state lazily localCheckpointed and persisted; the
+    kernel's ONE aggregate action over it is the job that fills both, so
+    a chunk costs one job. A kernel that steers its next round (the
+    direction-optimizing BFS switch, the δ-stepping bucket, Elkin's
+    no-progress hand-off) reads its extra scalars in that same action
+    and keeps them in its own closure; returning 0 stops the loop.
   * neither — a fixed-length run (label propagation, fixed_iters).
 
 ``boundary(state)`` is a lazy transform applied to a materialized state
@@ -46,6 +50,9 @@ its input and is only cheap on materialized state. The chunk's change is
 measured against its output. It runs at every chunk start after
 superstep 0, so a resumed run applies it exactly where an uninterrupted
 one did.
+
+The loop leaves no cached frame behind: the returned state's cache is
+released, and it reads from its local checkpoint or committed parquet.
 """
 
 from __future__ import annotations
@@ -100,6 +107,12 @@ def truncate_plan(df: DataFrame) -> DataFrame:
     return out
 
 
+def count_where(df: DataFrame, cond: Column) -> int:
+    """Rows of ``df`` where ``cond`` holds, in one aggregate action — the
+    usual ``delta`` of iterate(), where it is the round's only job."""
+    return int(df.agg(F.sum(F.when(cond, 1).otherwise(0))).first()[0] or 0)
+
+
 def _partition_counts(df: DataFrame) -> list[tuple[int, int]]:
     rows = (
         df.groupBy(F.spark_partition_id().alias("partition_id"))
@@ -143,7 +156,7 @@ def iterate(
     run_id: str | None = None,
     check_every: int = 1,
     change: Callable[[Column, Column], Column] | None = None,
-    delta: Callable[[int], Column] | None = None,
+    delta: Callable[[DataFrame, int], float] | None = None,
     boundary: Callable[[DataFrame], DataFrame] | None = None,
 ) -> SuperstepResult:
     """Run ``step(state, i) -> new_state`` (lazy) until the delta <= tol
@@ -159,7 +172,7 @@ def iterate(
         # (pagerank/components/labelprop use change or nothing). Wiring
         # it is easy — aggregate the committed re-read — but dead paths
         # rot: implement it when a kernel needs it.
-        raise NotImplementedError("delta Columns are not supported with durable io")
+        raise NotImplementedError("delta is not supported with durable io")
     spark = state.sparkSession
     run_id = run_id or uuid.uuid4().hex[:12]
     table = f"{kernel}_state_{run_id}"
@@ -218,14 +231,14 @@ def iterate(
                 ],
             )
         elif delta is not None:
-            # ONE job: the aggregate action computes the plan and fills
-            # the lazy localCheckpoint + cache (an Observation through a
-            # lazy localCheckpoint resolves to None — the CollectMetrics
+            # ONE job: the kernel's aggregate action computes the plan and
+            # fills the lazy localCheckpoint + cache (an Observation through
+            # a lazy localCheckpoint resolves to None — the CollectMetrics
             # node is buried in the checkpointed RDD; measured, do not
-            # retry). The persist keeps join-heavy rounds' size
-            # estimates flat (truncate_plan).
+            # retry). The persist keeps join-heavy rounds' size estimates
+            # flat (truncate_plan).
             new = new.localCheckpoint(eager=False).persist()
-            d = float(new.agg(delta(i + k - 1).alias("delta")).first()["delta"] or 0)
+            d = float(delta(new, i + k - 1))
         else:
             new = new.localCheckpoint(eager=True)
             d = _observed(obs)
@@ -240,4 +253,5 @@ def iterate(
         else:
             k_next = check_every
 
+    state.unpersist()
     return SuperstepResult(state, i, deltas, resumed_from)

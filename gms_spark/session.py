@@ -77,11 +77,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession.
+    """Build a SparkSession, or return the one already running.
 
     ``cores`` defaults to $SPARK_GRAFT_CPUS or '*'. On a real cluster the
     same code runs unchanged under spark-submit (master comes from the
     submit environment; ``local[...]`` is only the sandbox default).
+
+    A running session is returned as it is, and the arguments are then
+    ignored: ``getOrCreate`` would re-apply this builder's configs to it
+    and undo whatever its owner set (adaptive execution, broadcast
+    threshold, shuffle partitions) for every later query.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -125,10 +130,9 @@ def get_spark(
         b = b.master(master)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
-    # Warm once per underlying session: getOrCreate may hand back an
-    # already-running (already-warm) session — the marker rides the
-    # session object itself, so only a genuinely fresh JVM session pays.
+    spark = SparkSession.getActiveSession() or b.getOrCreate()
+    # Warm once per underlying session: the marker rides the session
+    # object itself, so only a genuinely fresh JVM session pays.
     if not getattr(spark, "_gms_spark_warmed", False):
         _warm_session(spark)
         spark._gms_spark_warmed = True

@@ -114,3 +114,18 @@ def test_cli_pagerank_only_flags_rejected(argv):
     with pytest.raises(SystemExit) as e:
         cli.main(argv)
     assert "pagerank" in str(e.value)
+
+
+def test_get_spark_keeps_running_session_confs(spark):
+    """get_spark hands back the running session without re-applying its
+    builder configs (adaptive execution on, among others) to it."""
+    from gms_spark.session import get_spark
+
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert get_spark("other") is spark
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, old)
