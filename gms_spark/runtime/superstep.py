@@ -16,11 +16,15 @@ exactly once (the chain then carries one copy of each round, not 2^k or
 Materialization:
   * in memory, a chunk ends in a localCheckpoint, so plan depth stays
     bounded by k whatever the iteration count;
-  * with a TableIO every superstep commits (k is 1): an atomic parquet
-    snapshot, a persisted re-read, and per-partition lineage rows
-    (iteration, partition id, rows, delta norm, wall ms). A relaunch with
-    the same (io, run_id) resumes after the last committed superstep and
-    applies the same per-superstep work an uninterrupted run would
+  * with a TableIO every superstep commits (k is 1), and the commit IS
+    the superstep: ONE Spark job, the parquet write, which also fills the
+    change Observation. The per-partition lineage rows (iteration,
+    partition id, rows, delta norm, wall ms) come from the commit marker
+    (the data files' footer record counts), and land before it. The next
+    superstep scans the committed snapshot directly — no cache, no count.
+    A relaunch with the same (io, run_id) reads the deltas from the
+    markers, resumes after the last committed superstep and applies the
+    same per-superstep work an uninterrupted run would
     (tests/test_superstep_resume.py).
 
 Delta forms (the scalar the driver compares with ``tol``, read exactly
@@ -65,7 +69,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from gms_spark.io.tableio import TableIO
+from gms_spark.io.tableio import TableIO, partition_rows
 
 
 @dataclass
@@ -113,13 +117,22 @@ def count_where(df: DataFrame, cond: Column) -> int:
     return int(df.agg(F.sum(F.when(cond, 1).otherwise(0))).first()[0] or 0)
 
 
-def _partition_counts(df: DataFrame) -> list[tuple[int, int]]:
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .count()
-        .collect()
-    )
-    return [(int(r["partition_id"]), int(r["count"])) for r in rows]
+def _lineage(kernel: str, run_id: str, i: int, marker: dict) -> list[dict]:
+    """Superstep i's lineage rows, one per written partition: a function of
+    its commit marker alone, so a relaunch can rebuild missing ones."""
+    return [
+        {
+            "kernel": kernel,
+            "run_id": run_id,
+            "iteration": i,
+            "partition_id": pid,
+            "rows": rows,
+            "delta_norm": marker["delta"],
+            "wall_ms": marker["wall_ms"],
+            "committed_at": marker["ts"],
+        }
+        for pid, rows in partition_rows(marker).items()
+    ]
 
 
 def _observe_change(
@@ -170,8 +183,9 @@ def iterate(
     if io is not None and delta is not None:
         # No durable kernel measures an aggregate over its new state
         # (pagerank/components/labelprop use change or nothing). Wiring
-        # it is easy — aggregate the committed re-read — but dead paths
-        # rot: implement it when a kernel needs it.
+        # it costs a second job per superstep (an aggregate over the
+        # committed scan) — and dead paths rot: implement it when a
+        # kernel needs it.
         raise NotImplementedError("delta is not supported with durable io")
     spark = state.sparkSession
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -182,19 +196,23 @@ def iterate(
 
     if io is not None:
         check_every = 1
-        last = io.last_committed(table)
-        if last is not None:
+        snaps = io.snapshots(table)
+        for j in snaps:
+            marker = io.marker(table, j)
+            if not io.has_lineage(run_id, kernel, j):  # lost after its commit: rebuild it
+                io.append_lineage(_lineage(kernel, run_id, j, marker))
+            deltas.append(marker["delta"])
+        if snaps:
+            # resume: the last committed scan, uncached, is the next input
+            last = snaps[-1]
             state = io.read(spark, table, last)
             i = last + 1
             resumed_from = last
-            prior = [r for r in io.lineage_rows() if r.get("run_id") == run_id and r.get("kernel") == kernel]
-            by_iter = {int(r["iteration"]): float(r["delta_norm"]) for r in prior}
-            deltas = [by_iter[j] for j in sorted(by_iter) if j <= last]
-            if deltas and deltas[-1] <= tol:
+            if deltas[-1] <= tol:
                 return SuperstepResult(state, i, deltas, resumed_from)
-
-    # no eager count: the first chunk's job fills the cache
-    state = state.persist()
+    if resumed_from is None:
+        # no eager count: the first chunk's job fills the cache
+        state = state.persist()
     k_next = check_every
     while i < max_iters:
         t0 = time.time()
@@ -209,27 +227,13 @@ def iterate(
         if io is not None:
             # The parquet job fires the Observation; the meta callback
             # runs after it, so the commit marker records the delta.
-            io.write(new, table, i, meta=lambda: {"delta": _observed(obs)})
-            d = _observed(obs)
-            new = io.read(spark, table, i).persist()
-            new.count()
-            wall_ms = (time.time() - t0) * 1000.0
-            io.append_lineage(
-                spark,
-                [
-                    {
-                        "kernel": kernel,
-                        "run_id": run_id,
-                        "iteration": i,
-                        "partition_id": pid,
-                        "rows": cnt,
-                        "delta_norm": d,
-                        "wall_ms": wall_ms,
-                        "committed_at": time.time(),
-                    }
-                    for pid, cnt in _partition_counts(new)
-                ],
+            marker = io.write(
+                new, table, i,
+                meta=lambda: {"delta": _observed(obs), "wall_ms": (time.time() - t0) * 1000.0},
+                lineage=lambda m: _lineage(kernel, run_id, i, m),
             )
+            d = marker["delta"]
+            new = io.read(spark, table, i)
         elif delta is not None:
             # ONE job: the kernel's aggregate action computes the plan and
             # fills the lazy localCheckpoint + cache (an Observation through

@@ -19,6 +19,7 @@ import pytest
 
 import gms_spark.graph.coloring as coloring_mod
 import gms_spark.graph.components as components_mod
+import gms_spark.graph.labelprop as labelprop_mod
 import gms_spark.graph.pagerank as pagerank_mod
 import gms_spark.graph.traversal as traversal_mod
 from gms_spark.graph.build import build_undirected, stage_edges
@@ -95,6 +96,32 @@ def test_components_one_job_per_chunk(spark, graph_df, no_broadcast_or_aqe, monk
     assert jobs == res.iterations // 3
 
 
+@pytest.mark.parametrize(
+    "module, run",
+    [
+        (pagerank_mod, lambda g, io: pagerank_mod.pagerank(g, tol=1e-6, io=io, run_id="jobs")),
+        (components_mod, lambda g, io: components_mod.connected_components(g, io=io, run_id="jobs")),
+        (labelprop_mod, lambda g, io: labelprop_mod.label_propagation(g, iters=5, io=io, run_id="jobs")),
+    ],
+    ids=["pagerank", "components", "labelprop"],
+)
+def test_durable_one_job_per_committed_superstep(spark, graph_df, no_broadcast_or_aqe, monkeypatch, tmp_path, module, run):
+    """The parquet write is the superstep: no re-read, count or lineage job."""
+    io = TableIO(str(tmp_path))
+    _, jobs, supersteps = _loop_jobs(spark, monkeypatch, module, lambda: run(graph_df, io))
+    assert supersteps > 1
+    assert jobs == supersteps
+
+
+def test_tableio_read_launches_no_job(spark, tmp_path):
+    io = TableIO(str(tmp_path))
+    io.write(spark.range(10).selectExpr("id as vertex", "id % 3 as label"), "t", 0)
+    group = f"read-{uuid.uuid4().hex[:8]}"
+    df = _in_group(spark, group, lambda: io.read(spark, "t", 0))
+    assert _group_jobs(spark, group) == 0
+    assert df.schema.simpleString() == "struct<vertex:bigint,label:bigint>"
+
+
 def test_jp_random_one_job_per_chunk(spark, graph_df, no_broadcast_or_aqe, monkeypatch):
     res, jobs, rounds = _loop_jobs(spark, monkeypatch, coloring_mod, lambda: coloring_mod.jp_random(graph_df))
     assert rounds == res.rounds and res.rounds % 4 == 0  # jp_color's default chunk
@@ -144,8 +171,13 @@ def test_bfs_direction_optimizing_one_job_per_level(spark, graph_df, no_broadcas
         lambda g, tmp: coloring_mod.barenboim(g).colors,
         lambda g, tmp: coloring_mod.elkin(g).colors,
         lambda g, tmp: pagerank_mod.pagerank(g, tol=1e-3, io=TableIO(str(tmp)), run_id="cache").scores,
+        lambda g, tmp: components_mod.connected_components(g, io=TableIO(str(tmp)), run_id="cache").components,
+        lambda g, tmp: labelprop_mod.label_propagation(g, iters=5, io=TableIO(str(tmp)), run_id="cache").labels,
     ],
-    ids=["bfs", "bfs_do", "sssp", "sssp_delta", "jp_random", "johansson", "barenboim", "elkin", "durable_pagerank"],
+    ids=[
+        "bfs", "bfs_do", "sssp", "sssp_delta", "jp_random", "johansson", "barenboim", "elkin",
+        "durable_pagerank", "durable_components", "durable_labelprop",
+    ],
 )
 def test_iterate_kernels_leave_no_cached_frames(spark, kernel, tmp_path):
     el = load_el("smallRandom1.el")

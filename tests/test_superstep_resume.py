@@ -147,3 +147,57 @@ def test_directed_redistribute_kill_and_resume_identical(spark, tmp_path):
         assert sr[v] == pytest.approx(sc[v], abs=1e-12)
     assert sum(sr.values()) == pytest.approx(1.0, abs=1e-9)
     _assert_gap_free_lineage(io, "dir1", resumed.iterations)
+
+
+def test_resume_rebuilds_lineage_of_a_commit_without_it(spark, graph_df, clean_scores, tmp_path):
+    """A snapshot committed without its lineage file (a crash between the
+    two, as when the marker landed first) neither skews the relaunch's
+    deltas nor leaves a lineage gap: the relaunch reads the deltas from
+    the markers and rebuilds the missing rows from the marker's counts."""
+    io = TableIO(str(tmp_path))
+    clean, sf = clean_scores
+    pagerank(graph_df, tol=TOL, max_iters=3, io=io, run_id="crash1")
+    lineage = tmp_path / "lineage" / "crash1_pagerank_000002.json"
+    lost = lineage.read_text()
+    lineage.unlink()
+    resumed = pagerank(graph_df, tol=TOL, max_iters=50, io=io, run_id="crash1")
+    assert resumed.iterations == clean.iterations
+    sr = _as_dict(resumed.scores, "score")
+    assert sr.keys() == sf.keys()
+    for v in sf:
+        assert sr[v] == pytest.approx(sf[v], abs=1e-12)
+    _assert_gap_free_lineage(io, "crash1", resumed.iterations)
+    assert lineage.read_text() == lost  # the marker holds every lineage field
+
+    # the same window after the converged superstep: the relaunch returns
+    # without running one, because the last marker's delta is <= tol
+    (tmp_path / "lineage" / f"crash1_pagerank_{resumed.iterations - 1:06d}.json").unlink()
+    again = pagerank(graph_df, tol=TOL, max_iters=50, io=io, run_id="crash1")
+    assert again.iterations == resumed.iterations
+    assert _as_dict(again.scores, "score") == sr
+    _assert_gap_free_lineage(io, "crash1", resumed.iterations)
+
+
+def test_lineage_records_the_written_partitions(spark, graph_df, tmp_path):
+    """Each superstep's lineage has one row per part file's writing task,
+    and the rows sum to the snapshot's row count."""
+    pinned = {"spark.sql.shuffle.partitions": "4", "spark.sql.adaptive.enabled": "false"}
+    old = {k: spark.conf.get(k) for k in pinned}
+    for k, v in pinned.items():
+        spark.conf.set(k, v)
+    try:
+        io = TableIO(str(tmp_path))
+        res = pagerank(graph_df, tol=TOL, max_iters=3, io=io, run_id="parts1")
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    rows = io.lineage_rows()
+    schema = ("kernel", "run_id", "iteration", "partition_id", "rows", "delta_norm", "wall_ms", "committed_at")
+    assert all(tuple(r) == schema for r in rows)
+    for i in range(res.iterations):
+        snap = tmp_path / "pagerank_state_parts1" / f"snap={i:08d}"
+        tasks = sorted(int(p.name.split("-")[1]) for p in snap.glob("part-*"))
+        assert len(tasks) > 1
+        mine = [r for r in rows if r["iteration"] == i]
+        assert sorted(r["partition_id"] for r in mine) == tasks
+        assert sum(r["rows"] for r in mine) == io.read(spark, "pagerank_state_parts1", i).count()
